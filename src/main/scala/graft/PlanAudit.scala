@@ -5,11 +5,11 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.get()
     val t = Tables(spark, args.headOption.getOrElse("/root/testdata/sf0.01"))
-    val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (names.isEmpty || names.contains(name)) {
-        println(s"\n########## $name ##########")
-        fn(spark, args.headOption.getOrElse("/root/testdata/sf0.01")).explain("formatted")
+    val names = args.drop(1).toSet
+    SparkEntry.registry.sortBy(_.name).foreach { d =>
+      if (names.isEmpty || names.contains(d.name)) {
+        println(s"\n########## ${d.name} ##########")
+        d.build(t).explain("formatted")
       }
     }
     spark.stop()

@@ -1,8 +1,8 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each registered query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare in tools/check_oracle.py. */
 object Verify {
 
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -25,8 +25,7 @@ object Verify {
     */
   private[graft] def run(
       spark: SparkSession, sfDir: String, outDir: String,
-      queries: Map[String, (SparkSession, String) => DataFrame],
-      oracleSql: Map[String, String]): Map[String, String] = {
+      registry: Seq[QueryDef]): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
     // failed queries must leave a durable trace, not just a stderr line:
     // a missing output dir reads as "query absent" to the driver's sheet,
@@ -34,8 +33,8 @@ object Verify {
     // rows with 36 broken queries invisible). Collect name → error here
     // and dump _failures.json next to oracle_sql.json.
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    registry.foreach { case QueryDef(name, build, _) =>
+      try build(Tables(spark, sfDir)).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -46,8 +45,8 @@ object Verify {
       // so a 100+-query session doesn't accumulate cache
       finally spark.catalog.clearCache()
     }
-    val json = oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = registry
+      .map(d => s"${q(d.name)}: ${q(d.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // always written (empty object on a clean run) so consumers can
     // distinguish "no failures" from "harness predates failure reporting"
@@ -62,10 +61,11 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional args 3+: dump only the named queries (local iteration aid)
+    // optional args 3+: dump only the named queries and their oracles
+    // (local iteration aid)
     val picked =
-      if (args.length <= 2) SparkEntry.queries
-      else SparkEntry.queries.filter { case (k, _) => args.drop(2).contains(k) }
+      if (args.length <= 2) SparkEntry.registry
+      else SparkEntry.registry.filter(d => args.drop(2).contains(d.name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the library's tuned session (AQE + coalescing + skew join + UTC),
     // exactly what a production run gets
@@ -73,7 +73,7 @@ object Verify {
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    run(spark, sfDir, outDir, picked, SparkEntry.oracleSql)
+    run(spark, sfDir, outDir, picked)
     spark.stop()
   }
 }

@@ -21,6 +21,17 @@ object Exact {
   /** Rates in [0,1]: discounts, taxes. */
   def rate(c: Column): Column = c.cast(DecimalType(4, 2))
 
+  /** Accumulator type of exact integer power sums. */
+  val d38: DecimalType = DecimalType(38, 0)
+
+  /** Revenue in exact integer MICRO-units (discPrice carries scale 6, so
+    * ×10⁶ is integral — cents would truncate sub-cent digits). Narrowed
+    * to DECIMAL(19,0) so a square's result type stays inside
+    * DECIMAL(38,0): 10¹⁸ micros ≈ 10¹² currency units of headroom.
+    */
+  def microUnits(rev: Column): Column =
+    (rev * lit(1000000)).cast(DecimalType(19, 0))
+
   /** SUM(dec(c)) surfaced as double. */
   def dsum(c: Column): Column = sum(dec(c)).cast("double")
 

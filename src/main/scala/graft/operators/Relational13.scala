@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.Exact.{dec, decToDouble, decToDoubleSql, decToDoubleSigned,
-  decToDoubleSignedSql, discPrice}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.Exact.{d38, dec, decToDouble, decToDoubleSigned,
+  decToDoubleSignedSql, decToDoubleSql, discPrice, microUnits}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -21,11 +21,6 @@ import org.apache.spark.sql.types.DecimalType
   * convention) when the element count is corpus-sized.
   */
 object Relational13 {
-
-  private val d38 = DecimalType(38, 0)
-
-  private def microUnits(rev: Column): Column =
-    (rev * lit(1000000)).cast(DecimalType(19, 0))
 
   // ---------------------------------------------------------------- entropy
 

@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.Exact.{dec, decToDouble, decToDoubleSql, decToDoubleSigned,
-  decToDoubleSignedSql, discPrice}
+import graft.functions.Exact.{d38, dec, decToDouble, decToDoubleSigned,
+  decToDoubleSignedSql, decToDoubleSql, discPrice}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -14,8 +14,6 @@ import org.apache.spark.sql.types.DecimalType
   * portable-rounding conventions.
   */
 object Relational15 {
-
-  private val d38 = DecimalType(38, 0)
 
   /** Whole currency units — the extremeValue / durbinWatson envelope
     * rule: means and their differences must fit the DECIMAL(24,12)

@@ -1,11 +1,10 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.Exact.{decToDouble, decToDoubleSql, discPrice}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.Exact.{d38, decToDouble, decToDoubleSql, discPrice, microUnits}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Market-structure and time-series diagnostics: supplier concentration
   * (Herfindahl-Hirschman) and revenue autocorrelation — the "how
@@ -19,16 +18,6 @@ import org.apache.spark.sql.types.DecimalType
   * precedent, so the shapes hold at 100 TB.
   */
 object Relational8 {
-
-  private val d38 = DecimalType(38, 0)
-
-  /** Supplier revenue in exact integer MICRO-dollars (discPrice carries
-    * scale 6, so ×10⁶ is integral — cents would truncate sub-cent digits).
-    * Narrowed to DECIMAL(19,0) so the square's result type stays inside
-    * DECIMAL(38,0): 10¹⁸ micros ≈ 10¹² dollars per supplier of headroom.
-    */
-  private def microUnits(rev: Column): Column =
-    (rev * lit(1000000)).cast(DecimalType(19, 0))
 
   /** Herfindahl-Hirschman concentration of supplier revenue within each
     * nation: HHI = Σᵢ sᵢ² where sᵢ is supplier i's share of the nation's

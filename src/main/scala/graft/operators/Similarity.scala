@@ -1949,12 +1949,13 @@ object Similarity {
         .select(lit(tag).as("half"), col("vec_id"), col("v"))
     val seedRaw = seedRows(hA, "A").unionByName(seedRows(hB, "B"))
       .collect().groupBy(_.getString(0))
-    // getOrElse: an empty half (no even or no odd vec_ids) degrades to
-    // an empty seed set like the pre-r17 per-half seeds() path did,
-    // instead of a NoSuchElementException on the grouped map (r17 ADVICE)
+    // an empty half has no model to compare: fail here, by name, rather
+    // than at analysis of an empty distance array further down
+    for ((tag, parity) <- Seq("A" -> "even", "B" -> "odd"))
+      require(seedRaw.contains(tag),
+        s"embed_cluster_stability: half $tag is empty (no $parity vec_id)")
     def seedsOf(tag: String): Seq[(Int, Seq[Double])] =
-      seedRaw.getOrElse(tag, Array.empty[org.apache.spark.sql.Row])
-        .sortBy(_.getLong(1)).map(_.getSeq[Double](2))
+      seedRaw(tag).sortBy(_.getLong(1)).map(_.getSeq[Double](2))
         .zipWithIndex.map { case (v, i) => (i, v) }.toSeq
     var cA = seedsOf("A")
     var cB = seedsOf("B")

@@ -5,10 +5,8 @@ class EntrySpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("every registered query analyzes against the test schema") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val schema = fn(spark, dir).schema // analysis only — resolves plan
-      assert(schema.fields.nonEmpty, s"$name has an empty schema")
-    }
+    val empty = InventoryAudit.built(sf).filter(_.columns == 0).map(_.name)
+    assert(empty.isEmpty, s"queries with an empty schema: $empty")
   }
 
   test("no registered query exposes DecimalType at its output seam") {
@@ -18,37 +16,21 @@ class EntrySpec extends SparkSpec {
     // decimal columns differently from int64, so a value-correct decimal
     // output still fails the gate. graph_hits (BIGINT femto scores) is
     // the pattern; this guard makes the convention mechanical.
-    import org.apache.spark.sql.types._
-    def decimals(dt: DataType, path: String): Seq[String] = dt match {
-      case _: DecimalType => Seq(path)
-      case s: StructType =>
-        s.fields.toSeq.flatMap(f => decimals(f.dataType, s"$path.${f.name}"))
-      case a: ArrayType => decimals(a.elementType, s"$path[]")
-      case m: MapType =>
-        decimals(m.keyType, s"$path<key>") ++ decimals(m.valueType, s"$path<val>")
-      case _ => Nil
-    }
-    val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      fn(spark, dir).schema.fields.flatMap(f =>
-        decimals(f.dataType, s"$name.${f.name}"))
-    }
+    val offenders = InventoryAudit.built(sf).flatMap(_.decimalPaths)
     assert(offenders.isEmpty,
       s"DecimalType at an output seam (cast to long/double): $offenders")
   }
 
-  test("every oracle key has a matching query key") {
-    val qk = SparkEntry.queries.keySet
-    val ok = SparkEntry.oracleSql.keySet
-    assert(ok.subsetOf(qk), s"orphan oracle keys: ${ok diff qk}")
+  test("registry names are unique (the keyed views would drop a duplicate)") {
+    val dups = SparkEntry.registry.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate registry names: $dups")
   }
 
-  test("every query is oracled — the full-coverage invariant holds") {
-    // the whole inventory is hash-checked against DuckDB; a new query
-    // registered without an oracle silently downgrades to a rows-only
-    // check at the driver, so drift fails HERE first
-    val qk = SparkEntry.queries.keySet
-    val ok = SparkEntry.oracleSql.keySet
-    assert(qk == ok, s"un-oracled queries: ${qk diff ok}")
+  test("every registered query carries a non-blank oracle") {
+    // the whole inventory is hash-checked against DuckDB; a blank oracle
+    // would fail only there, far from the registry line that caused it
+    val blank = SparkEntry.registry.filter(_.oracleSql.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"blank oracle SQL: $blank")
   }
 
   test("flagship entry returns rows at sf0.001") {
@@ -58,9 +40,8 @@ class EntrySpec extends SparkSpec {
   test("every registered query is documented in SURVEY.md (inventory can't drift)") {
     // the judge checks SURVEY §2 line by line; a query registered
     // without an inventory row is invisible coverage, a row without a
-    // query is a false claim — this guards the first direction, and the
-    // full-coverage invariant above (queries == oracles) plus the
-    // driver's sheet guard the rest
+    // query is a false claim — this guards the first direction, and
+    // the oracle compare guards the rest
     val survey = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("SURVEY.md")), "UTF-8")
     val undocumented = SparkEntry.queries.keySet.filterNot(k => survey.contains(s"`$k`"))

@@ -9,16 +9,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 class HarnessSpec extends SparkSpec {
 
-  private val good: (SparkSession, String) => DataFrame =
-    (s, _) => { import s.implicits._; Seq((1L, "a"), (2L, "b")).toDF("id", "v") }
-  private val broken: (SparkSession, String) => DataFrame =
-    (s, dir) => Tables(s, dir).documents.selectExpr("no_such_column + 1")
+  private val good: Tables => DataFrame =
+    t => { import t.spark.implicits._; Seq((1L, "a"), (2L, "b")).toDF("id", "v") }
+  private val broken: Tables => DataFrame =
+    _.documents.selectExpr("no_such_column + 1")
+  private def keyed(build: Tables => DataFrame): (SparkSession, String) => DataFrame =
+    (s, dir) => build(Tables(s, dir))
 
   test("Verify records a broken query in _failures.json and still dumps the rest") {
     val out = java.nio.file.Files.createTempDirectory("graft-harness").toString
     val failures = Verify.run(spark, "/root/testdata/sf0.001", out,
-      Map("ok_query" -> good, "broken_query" -> broken),
-      Map("ok_query" -> "SELECT 1"))
+      Seq(QueryDef("ok_query", good, "SELECT 1"),
+        QueryDef("broken_query", broken, "SELECT 1")))
     assert(failures.keySet == Set("broken_query"))
     assert(failures("broken_query").nonEmpty)
     // the good query's parquet landed; the broken one left no output dir
@@ -34,23 +36,11 @@ class HarnessSpec extends SparkSpec {
   test("Verify writes an EMPTY _failures.json on a clean run (absence is provable)") {
     val out = java.nio.file.Files.createTempDirectory("graft-harness2").toString
     val failures = Verify.run(spark, "/root/testdata/sf0.001", out,
-      Map("ok_query" -> good), Map.empty)
+      Seq(QueryDef("ok_query", good, "SELECT 1")))
     assert(failures.isEmpty)
     val failJson = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$out/_failures.json")), "UTF-8")
     assert(failJson.trim == "{}")
-  }
-
-  test("every queries entry has an oracle — a correct round's map is never undersized") {
-    // r14 shipped CORRECTNESS_r14.json as a literal `{}` and nothing
-    // in-repo noticed. The artifact is derived from oracle_sql.json, so
-    // the invariant that makes "map size == queries size" checkable at
-    // all is: every registered query carries a SQL oracle. Pin it here;
-    // tools/check_oracle.py --emit refuses to write an undersized map.
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(missing.isEmpty, s"queries with no oracle: ${missing.toSeq.sorted}")
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles with no query: ${orphans.toSeq.sorted}")
   }
 
   test("Bench.historyMedians: per-query median across rounds, work units where recorded, fail-open on bad file") {
@@ -124,7 +114,7 @@ class HarnessSpec extends SparkSpec {
 
   test("Bench routes a broken query to the error map, excluded from timings") {
     val (results, errs, _) = Bench.measure(spark, "/root/testdata/sf0.001",
-      Map("ok_query" -> good, "broken_query" -> broken), reps = 2)
+      Map("ok_query" -> keyed(good), "broken_query" -> keyed(broken)), reps = 2)
     assert(results.keySet == Set("ok_query"))
     assert(errs.keySet == Set("broken_query"))
     assert(errs("broken_query").nonEmpty)

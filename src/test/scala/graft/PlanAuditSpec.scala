@@ -5,10 +5,9 @@ package graft
   * table's full width unless the operator genuinely consumes it).
   * This is the automated sweep behind the per-operator plan assertions —
   * a regression that sneaks a cross join or kills pruning fails HERE.
+  * Every test reads the one shared pass of [[InventoryAudit]].
   */
 class PlanAuditSpec extends SparkSpec {
-
-  private val dir = "/root/testdata/sf0.001"
 
   // operators documented to consume (nearly) every column of a table
   private val fullWidthOk = Set(
@@ -16,13 +15,7 @@ class PlanAuditSpec extends SparkSpec {
     "q_sql_interface", "src_parquet")
 
   test("no registered query plans a cartesian product") {
-    val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val plan = fn(spark, dir).queryExecution.executedPlan.toString
-      // BroadcastNestedLoopJoin appears for broadcast-1-row crossJoins,
-      // which are bounded by construction; CartesianProduct is the
-      // unbounded shuffle-side catastrophe
-      if (plan.contains("CartesianProduct")) Some(name) else None
-    }
+    val offenders = InventoryAudit.built(sf).filter(_.cartesian).map(_.name)
     assert(offenders.isEmpty, s"cartesian plans: $offenders")
   }
 
@@ -33,17 +26,11 @@ class PlanAuditSpec extends SparkSpec {
     // entry past the query. Training-time caches are fine ONLY if
     // released before the result frame is handed back; cross-consumer
     // reuse must ride localCheckpoint or a SessionMemo frame instead.
-    spark.catalog.clearCache()
-    val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val df = fn(spark, dir)
-      val cached = df.queryExecution.executedPlan.toString
-        .contains("InMemoryTableScan")
-      // every operator must also leave the cache EMPTY once its frame
-      // is built (leaked entries pile up across a 300-query session)
-      val leaked = !spark.sharedState.cacheManager.isEmpty
-      spark.catalog.clearCache()
-      (if (cached) Seq(s"$name plans InMemoryTableScan") else Nil) ++
-        (if (leaked) Seq(s"$name leaks a cache entry") else Nil)
+    // Every operator must also leave the cache EMPTY once its frame is
+    // built (leaked entries pile up across a 300-query session).
+    val offenders = InventoryAudit.built(sf).flatMap { f =>
+      (if (f.cachedScan) Seq(s"${f.name} plans InMemoryTableScan") else Nil) ++
+        (if (f.leaksCache) Seq(s"${f.name} leaks a cache entry") else Nil)
     }
     assert(offenders.isEmpty, s"cached-plan offenders:\n${offenders.mkString("\n")}")
   }
@@ -97,13 +84,8 @@ class PlanAuditSpec extends SparkSpec {
     "pipeline_pretrain" -> "composed bounded stages (bucket offsets, top-k vocab)")
 
   test("no unpartitioned window outside the bounded-frame whitelist") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val n = fn(spark, dir).queryExecution.optimizedPlan.collect {
-        case w: LWindow if w.partitionSpec.isEmpty => w
-      }.size
-      if (n > 0) Some(name) else None
-    }.toSet
+    val offenders =
+      InventoryAudit.built(sf).filter(_.unpartitionedWindows > 0).map(_.name).toSet
     val unexpected = offenders -- unpartitionedWindowOk.keySet
     val stale = unpartitionedWindowOk.keySet -- offenders
     assert(unexpected.isEmpty,
@@ -112,30 +94,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("every events/lineitem/documents scan prunes columns") {
-    val tableWidths = Map(
-      "events" -> sf.events.schema.size,
-      "lineitem" -> sf.lineitem.schema.size,
-      "documents" -> sf.documents.schema.size)
-    val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      if (fullWidthOk(name)) Nil
-      else {
-        val plan = fn(spark, dir).queryExecution.executedPlan.toString
-        // each scan line carries ReadSchema: struct<...>; count its fields
-        plan.linesIterator.flatMap { line =>
-          val i = line.indexOf("ReadSchema: struct<")
-          if (i < 0) None
-          else {
-            val spec = line.substring(i + "ReadSchema: struct<".length)
-              .takeWhile(_ != '>')
-            val nCols = if (spec.trim.isEmpty) 0 else spec.count(_ == ':')
-            tableWidths.collectFirst {
-              case (tbl, width) if line.contains(s"$tbl.parquet") && nCols >= width && width > 2 =>
-                s"$name reads all $nCols cols of $tbl"
-            }
-          }
-        }.toSeq
-      }
-    }
+    val offenders = InventoryAudit.built(sf).filterNot(f => fullWidthOk(f.name))
+      .flatMap(_.unprunedScans)
     assert(offenders.isEmpty, s"unpruned scans:\n${offenders.mkString("\n")}")
   }
 }

@@ -572,6 +572,17 @@ class Round12Spec extends SparkSpec {
     assert(r.getLong(1) <= 16L && r.getLong(2) <= 16L)
   }
 
+  test("cluster stability: an empty id-parity half fails by name") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-stability").toString
+    (0 until 8).map(i => (2L * i, Seq(i.toFloat, 1f - i)))
+      .toDF("vec_id", "embedding")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val e = intercept[IllegalArgumentException](
+      graft.operators.Similarity.clusterStability(Tables(spark, dir)))
+    assert(e.getMessage.contains("half B is empty (no odd vec_id)"), e.getMessage)
+  }
+
   test("median polish: exact additive identity, sweeps leave median-0 slices") {
     val rows = Relational11.medianPolish(sf).collect()
     assert(rows.length == 84) // 7 weekdays x 12 months
